@@ -71,21 +71,37 @@ def _host_col(url):
     return F.regexp_extract(url, _HOST_RE, 1)
 
 
+def _unpersist(df: DataFrame) -> None:
+    """Release a round cache. ``Dataset.unpersist`` leaves a
+    localCheckpoint's blocks in place: they belong to the checkpointed
+    RDD under the plan's ``LogicalRDD``, which is released here too —
+    the way Spark's ContextCleaner does it, since ``RDD.unpersist``
+    logs a warning for every locally checkpointed RDD."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        df.sparkSession.sparkContext._jsc.sc().unpersistRDD(
+            plan.rdd().id(), False
+        )
+
+
 class _BgAction:
     """Concurrent Spark action that re-raises its failure on join —
     a silently-dead background write must fail the round, not produce
     an incomplete checkpoint.
 
-    When ``sc`` is given, the action runs in the ``background``
-    fair-scheduler pool. Under the default FIFO scheduler a
-    "background" job's tasks occupy EVERY task slot until done, so the
-    next foreground job queues behind it and the overlap this class
-    exists for never happens — measured in the round-4 rounds-mode
-    decomposition, where each round's wall tracked its image-decode
-    "background" write almost 1:1. With ``spark.scheduler.mode=FAIR``
-    (session.py) and this pool split, foreground rounds and background
-    writes share task slots fairly, which converts the wide level's
-    idle slots into genuine pipeline overlap.
+    When ``sc`` is given, the action is tagged with the ``background``
+    fair-scheduler pool. The tag only acts under
+    ``spark.scheduler.mode=FAIR``, and ``session.get_spark`` defaults to
+    FIFO (``SPARK_GRAFT_SCHEDULER_MODE`` overrides it). Under FIFO the
+    pool is ignored: a "background" job's tasks occupy every task slot
+    until done and the next foreground job queues behind it — measured
+    in the round-4 rounds-mode decomposition, where each round's wall
+    tracked its image-decode "background" write almost 1:1. Under FAIR,
+    foreground rounds and background writes share task slots, which
+    turns idle slots into pipeline overlap; the paired A/B in
+    session.py measured that neutral to slightly slower on a box whose
+    slots are not idle, hence the FIFO default.
 
     Pool tagging REQUIRES PySpark pinned-thread mode (PYSPARK_PIN_THREAD,
     default on since Spark 3.2): setLocalProperty is per-JVM-thread, and
@@ -1067,8 +1083,11 @@ class CrawlEngine:
         # (CacheManager dedupes re-registration across engines over
         # the same corpus, so repeated runs share ONE fill; release
         # explicitly via release_corpus_pins() in long-lived sessions).
+        # A repeated run() on this engine (e.g. run, then
+        # run(resume=True)) keeps the pins it already holds.
         if (
-            cfg.corpus_cache_min_depth is not None
+            not self._corpus_pins
+            and cfg.corpus_cache_min_depth is not None
             and cfg.max_depth >= cfg.corpus_cache_min_depth
             and self._corpus_bytes_on_disk() <= cfg.corpus_cache_max_bytes
         ):
@@ -1213,6 +1232,10 @@ class CrawlEngine:
         if resume:
             self._recover_swaps()  # repair a checkpoint crashed mid-swap
         seed_write_thread: _BgAction | None = None
+        # the localCheckpoint serving as `frontier` (None when the
+        # frontier is parquet-backed): released with the tail of the
+        # round that consumed it, or after the loop if no round did
+        frontier_ckpt: DataFrame | None = None
         done = self._complete_rounds()
         if resume and done:
             start_round = done[-1] + 1
@@ -1261,7 +1284,9 @@ class CrawlEngine:
                 # and the writer thread is joined with round 0's tail,
                 # before that manifest exists. Was a 2-3 s FOREGROUND
                 # write on 250k-seed mega rounds.
-                frontier = seed_fr_plan.localCheckpoint(eager=False)
+                frontier = frontier_ckpt = seed_fr_plan.localCheckpoint(
+                    eager=False
+                )
                 n_frontier = frontier.count()
                 seed_write_thread = _BgAction(
                     self._write, frontier, 0, "frontier_seed",
@@ -1333,12 +1358,14 @@ class CrawlEngine:
         live_bcs: list = []
         if seed_write_thread is not None:
             live_threads.append(seed_write_thread)
+        if frontier_ckpt is not None:
+            live_caches.append(frontier_ckpt)
 
         def settle_tail(tail: dict) -> None:
             for th in tail["threads"]:
                 th.join()
             for df in tail["unpersist"]:
-                df.unpersist()
+                _unpersist(df)
             for bc in tail["bcs"]:
                 bc.destroy()
             live_threads[:] = [
@@ -1952,17 +1979,21 @@ class CrawlEngine:
                         )
                         if th is not None
                     ],
-                    # (seed thread rides in round 0's tail only)
+                    # (seed thread rides in round 0's tail only). The
+                    # frontier this round consumed is released only
+                    # here, after the writes that read it are joined.
                     "unpersist": [cleaned]
-                    + ([] if identity_dequeue else [dequeued, carry]),
+                    + ([] if identity_dequeue else [dequeued, carry])
+                    + ([frontier_ckpt] if frontier_ckpt is not None else []),
                     "bcs": round_bcs,
                     "round_no": round_no,
                     "manifest": None,  # manifest travels with the light tail
                 }
                 seed_write_thread = None  # consumed by round 0's tail
+                frontier_ckpt = fr_cached
                 light_tail = {
                     "threads": [frontier_thread] if frontier_thread else [],
-                    "unpersist": [fr_cached] if fr_cached is not None else [],
+                    "unpersist": [],
                     "bcs": [],
                     "round_no": round_no,
                     "manifest": {
@@ -2016,6 +2047,15 @@ class CrawlEngine:
             if pending_tail is not None:  # loop exited: settle the last round
                 settle_tail(pending_tail)
                 pending_tail = None
+            # the frontier no round consumed (the last one, or the seeds
+            # when no round ran), after the write that reads it
+            settle_tail({
+                "threads": [seed_write_thread] if seed_write_thread else [],
+                "unpersist": [frontier_ckpt] if frontier_ckpt is not None else [],
+                "bcs": [],
+                "round_no": round_no,
+                "manifest": None,
+            })
         except BaseException:
             # Exceptional exit: settle everything still live so a failed
             # round never leaves a writer thread racing session teardown
@@ -2031,7 +2071,7 @@ class CrawlEngine:
                     pass
             for df in live_caches:
                 try:
-                    df.unpersist()
+                    _unpersist(df)
                 except Exception:  # noqa: BLE001
                     pass
             for bc in live_bcs:

@@ -290,10 +290,16 @@ def minhash_near_dup_pairs(
     """Full MinHash+LSH near-dup pipeline with exact-Jaccard verify.
 
     candidates come from LSH banding; the verification joins shingle
-    sets back only for candidates and computes true Jaccard with
+    sets back only for candidates and computes Jaccard with
     array_intersect/array_union (JVM) — LSH false positives are
-    filtered, so the result equals exact all-pairs Jaccard ≥ threshold
+    filtered, so the result equals all-pairs Jaccard ≥ threshold
     restricted to LSH-recalled pairs.
+
+    The verify compares the sets of 64-bit shingle HASHES
+    (``shingle_hashes_col``), not the shingle strings. It is exact
+    unless two distinct shingles of one compared pair share a hash:
+    p < |union|²/2⁶⁴, about 1e-15 per pair. A string-set Jaccard oracle
+    can in principle disagree with it on such a collision.
 
     Hot-bucket guard (``collapse_exact``): B exact copies of one
     document would put B rows in every one of its LSH buckets → B²
