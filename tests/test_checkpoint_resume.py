@@ -1,14 +1,17 @@
 """Checkpoint/resume: a crawl killed mid-flight resumes from the last
 complete round manifest and produces the identical final state
 (reference analog: the crawl_jobs status machine re-drives incomplete
-work, `crawlmanager.go:76-96`)."""
+work, `crawlmanager.go:76-96`). The completed crawl is compared with the
+golden adjacency vendored as `tests/fixtures/integration_test_results.json`
+(FIXTURES.md §2)."""
 
 import json
+from pathlib import Path
 
 from sitemapper_spark import corpus as corpus_mod
 from sitemapper_spark.engine import CrawlConfig, CrawlEngine
 
-GOLDEN = "/root/reference/sitemapper/internal/testdata/integration_test_results.json"
+GOLDEN = Path(__file__).parent / "fixtures" / "integration_test_results.json"
 ROOT = corpus_mod.testsite_root()
 
 
