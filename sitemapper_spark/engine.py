@@ -2,8 +2,8 @@
 reference's three crawl engines (`crawler.go:27-46`) and of its own
 distributed NATS/Cassandra decomposition (`crawlmanager.go:43-148`).
 
-One **round** is one DataFrame job; the driver loop is the fixpoint
-(SURVEY.md §3). Semantics preserved from the reference:
+One **round** is one pass of DataFrame jobs; the driver loop is the
+fixpoint (SURVEY.md §3). Semantics preserved from the reference:
 
 * depth gate before expansion (`crawler.go:93`): pages at depth
   0..max_depth-1 are fetched; links discovered at the horizon are
@@ -216,72 +216,11 @@ class CrawlConfig:
     # (local files only; unknown/remote sizes disable the cache) — at
     # corpus scales beyond memory the per-round rescans are the
     # streaming design, not a bug, and the cache would just thrash.
-    frontier_handoff: bool = True  # round N's frontier_next is handed
-    # to round N+1 as an eager localCheckpoint (same repartition
-    # exchange, no parquet encode on the critical path, lineage
-    # truncated to an in-memory scan) while the parquet checkpoint
-    # writes in the background; the write is joined before the round's
-    # manifest, so resume semantics are unchanged. The r4 decomp
-    # measured the foreground frontier write at 13-23 s/round at mega
-    # sizes — pure critical-path time. Old checkpoint blocks are freed
-    # by Spark's ContextCleaner when the handle is garbage-collected.
-    pipeline_rounds: bool = True  # small-round tail pipelining: a
-    # round's background writes are joined (and its manifest written)
-    # at the end of the NEXT round, so the write tail overlaps the next
-    # round's compute — the fixpoint-floor lever for BFS-shaped crawls
-    # with many small rounds. "Manifest present = round complete" is
-    # preserved exactly (the manifest is still written only after every
-    # artifact is durable); a crash loses at most one manifest and
-    # resume re-runs that round deterministically. Fat rounds
-    # (> DIRECT_ABSORB_MAX dequeued) always settle inline.
-    overlap_fat_writes: bool = True  # fat rounds (round 5): the edges +
-    # lineage writes run as CONCURRENT actions instead of a foreground
-    # barrier, and the candidate/heat chain derives from the cached
-    # `cleaned` slice by the SAME row-local explode that feeds the
-    # write — provably identical rows, no write-then-reread. The r5
-    # verbose decomp measured the foreground edges+lineage write at
-    # ~28 s of a ~41 s clean warm mega round at local[32] — a barrier
-    # spent at 83% busy, i.e. idle slots existed that the candidate
-    # chain could fill. Unlike the small-round path this persists
-    # NOTHING extra (the explode is recomputed from `cleaned`, which
-    # is already cached for the whole round) and the heavy tail still
-    # settles inline at round end, so the memory profile and the
-    # "manifest present = round complete" crash contract are exactly
-    # the old fat path's. Off = the pre-r5 foreground barrier.
     salt_buckets: int = 8
     hot_host_threshold: int = 100_000  # frontier rows per host before salting
     max_rounds: int = 1000
     checkpoint_dir: str | None = None  # None → engine-managed temp dir
     num_partitions: int | None = None
-    adaptive_partitions: bool = True  # size each round's exchanges by
-    # DATA VOLUME (n_dequeued / rows_per_partition, clamped to
-    # [min(8, num_partitions), num_partitions]) instead of a fixed
-    # cores-sized count. Measured (BENCH.md §3.3,
-    # bench_scaling_r4_rounds32_p8.json): on 37k-row fixpoint rounds,
-    # local[32] with 32-way exchanges pays a per-round tiny-task floor
-    # (32 shuffle buckets + 32 parquet files + 32-task stages per job,
-    # each task <2k rows) that made the wide level SLOWER than
-    # local[8]; forcing 8 partitions cut the certified warm pass
-    # 23.2 s → 16.7 s (identical output sha). Fat rounds are untouched
-    # (4M rows / 8192 ≫ num_partitions clamps to num_partitions), so
-    # the mega shape keeps its cores-wide exchanges. This is exactly
-    # AQE's coalescing rationale applied to the exchanges AQE cannot
-    # touch (explicit repartition + map-side bucket/file counts). On a
-    # 1000-executor cluster the same rule keeps a 10^5-row tail round
-    # from scattering into 10^5 ~1-row tasks.
-    rows_per_partition: int = 8192  # target rows per exchange
-    # partition under adaptive_partitions; 37k-row rounds → 8 parts
-    # (the measured winner), 4M-row mega rounds → cores-clamped.
-    adaptive_fanout: float = 1.0  # multiplier on n_dequeued when sizing
-    # the round's exchanges: the candidate shuffle processes roughly
-    # n_dequeued × link-fanout rows, so a small dequeue with high
-    # fan-out (5k pages × 100 links = 500k candidate rows) would
-    # otherwise get its candidate exchange squeezed into the 8-part
-    # floor (round-4 ADVICE). Set to the corpus's expected avg
-    # out-degree for high-fanout workloads; 1.0 (no correction) is the
-    # default because every measured shape (8-link synthetic corpora)
-    # clamps to num_partitions long before fan-out matters, and the
-    # certified r4 numbers were taken at this sizing.
     priority_decay: float = 0.0  # candidate priority = parent − decay
     priority_fn: Callable[[], Column] | None = None  # custom frontier
     # priority: a zero-arg callable returning a Column over the
@@ -382,19 +321,21 @@ class CrawlEngine:
     def _ckpt(self, *parts: str) -> str:
         return os.path.join(self._dir, *parts)
 
-    def _write(self, df: DataFrame, round_no: int, name: str) -> DataFrame:
-        """Materialize a round artifact: truncates plan lineage, makes the
-        round restartable, and bounds memory like the reference's
-        Cassandra state tables do (`cassandra.go:79-118`)."""
+    def _write(self, df: DataFrame, round_no: int, name: str) -> None:
+        """Write a round artifact: makes the round restartable and bounds
+        memory like the reference's Cassandra state tables do
+        (`cassandra.go:79-118`). Write-only: a read-back would start one
+        more schema-inference job per artifact, and the round body
+        consumes its caches instead."""
         t0 = time.perf_counter()
-        path = self._ckpt(f"round={round_no:05d}", name)
-        df.write.mode("overwrite").parquet(path)
+        df.write.mode("overwrite").parquet(
+            self._ckpt(f"round={round_no:05d}", name)
+        )
         if self.config.verbose:
             print(
                 f"[crawl]   write {name}: {time.perf_counter() - t0:.2f}s",
                 flush=True,
             )
-        return self.spark.read.parquet(path)
 
     def _manifest(self, round_no: int, payload: dict) -> None:
         path = self._ckpt(f"round={round_no:05d}", "MANIFEST.json")
@@ -650,6 +591,18 @@ class CrawlEngine:
     # vectorized driver-side add_many. Big rounds keep the distributed
     # tree build — at production round sizes the partials amortize.
     DIRECT_ABSORB_MAX = 1_000_000
+    # target rows per exchange partition: each round's exchanges are
+    # sized by data volume (n_dequeued / this, clamped to
+    # [min(8, npart), npart]) instead of a fixed cores-sized count.
+    # Measured (BENCH.md §3.3, bench_scaling_r4_rounds32_p8.json): on
+    # 37k-row fixpoint rounds at local[32], 32-way exchanges paid a
+    # per-round tiny-task floor (32 shuffle buckets + 32 parquet files
+    # + 32-task stages, each task <2k rows); 8 partitions cut the
+    # certified warm pass 23.2 s → 16.7 s with an identical output sha.
+    # Fat rounds (4M rows / 8192 ≫ npart) clamp to npart. This is AQE's
+    # coalescing rationale applied to the exchanges AQE cannot touch
+    # (explicit repartition + map-side bucket/file counts).
+    ROWS_PER_PARTITION = 8192
 
     def _absorb_into_bloom(
         self, visited_slice: DataFrame, n_rows: int | None = None
@@ -1272,29 +1225,22 @@ class CrawlEngine:
             # an unmaterialized seed plan would re-run its
             # dropDuplicates shuffle for each — measured as double
             # round-0 latency on 500k-seed mega rounds. Rounds >= 1 get
-            # this for free from the frontier_next checkpoint.
-            seed_fr_plan = seed_plan.repartition(npart, "host_hash", "salt")
-            if cfg.frontier_handoff:
-                # round-6: the seed frontier gets the SAME handoff as
-                # frontier_next (one lazy localCheckpoint + count job
-                # materializes and sizes it; the parquet lands in the
-                # background under round 0's compute). Safe for resume:
-                # frontier_seed is never read back on resume — a crash
-                # before round 0's manifest restarts from the seeds —
-                # and the writer thread is joined with round 0's tail,
-                # before that manifest exists. Was a 2-3 s FOREGROUND
-                # write on 250k-seed mega rounds.
-                frontier = frontier_ckpt = seed_fr_plan.localCheckpoint(
-                    eager=False
-                )
-                n_frontier = frontier.count()
-                seed_write_thread = _BgAction(
-                    self._write, frontier, 0, "frontier_seed",
-                    sc=spark.sparkContext,
-                )
-            else:
-                frontier = self._write(seed_fr_plan, 0, "frontier_seed")
-                n_frontier = frontier.count()  # parquet metadata count
+            # this for free from the frontier_next checkpoint. The seed
+            # frontier gets the SAME handoff as frontier_next (one lazy
+            # localCheckpoint + count job materializes and sizes it; the
+            # parquet lands in the background under round 0's compute). Safe for resume: frontier_seed is never read
+            # back on resume — a crash before round 0's manifest
+            # restarts from the seeds — and the writer thread is joined
+            # with round 0's tail, before that manifest exists. As a
+            # foreground write it took 2-3 s on 250k-seed mega rounds.
+            frontier = frontier_ckpt = seed_plan.repartition(
+                npart, "host_hash", "salt"
+            ).localCheckpoint(eager=False)
+            n_frontier = frontier.count()
+            seed_write_thread = _BgAction(
+                self._write, frontier, 0, "frontier_seed",
+                sc=spark.sparkContext,
+            )
             visited_rounds = []
             self._visited_rounds = visited_rounds
 
@@ -1313,21 +1259,20 @@ class CrawlEngine:
         # in-flight writers first.
         self._visited_write_threads: list[_BgAction] = []
 
-        # adaptive per-round exchange sizing (see CrawlConfig
-        # .adaptive_partitions): the session's shuffle-partition count
-        # is retuned per round from the measured dequeue size and
-        # restored on normal exit. Mutating the session conf is safe
-        # for correctness at ANY value — every operator in the loop is
-        # parallelism-invariant (the scaling protocol asserts
-        # sha-identical output at local[8] vs local[32], and the p8
-        # experiment matched the same sha) — so a leak on an
-        # exceptional exit can at worst slow a later query, never
-        # change results.
+        # per-round exchange sizing (see ROWS_PER_PARTITION): the
+        # session's shuffle-partition count is retuned per round from
+        # the measured dequeue size and restored on every exit.
+        # Mutating the session conf is safe for correctness at ANY
+        # value — every operator in the loop is parallelism-invariant
+        # (the scaling protocol asserts sha-identical output at
+        # local[8] vs local[32], and the p8 experiment matched the same
+        # sha) — so a leak on an exceptional exit can at worst slow a
+        # later query, never change results.
         orig_sp = spark.conf.get("spark.sql.shuffle.partitions", str(npart))
         try:
             cur_sp = int(orig_sp)
         except ValueError:  # e.g. "auto" on AQE-managed external sessions
-            cur_sp = -1  # unknown → first adaptive round always sets
+            cur_sp = -1  # unknown → the first round always sets it
 
         # Round-tail pipelining (small-round regime): a round's
         # background writes (edges/lineage/images) are JOINED — and its
@@ -1430,9 +1375,8 @@ class CrawlEngine:
                 #    The visited parquet write is a BACKGROUND action
                 #    (joined before this round's manifest, so "manifest
                 #    present = round complete" is untouched); the round
-                #    body consumes the cached slice directly instead of
-                #    the old write-then-reread barrier, which held the
-                #    whole round behind a foreground parquet encode.
+                #    body consumes the cached slice directly, so no
+                #    foreground parquet encode holds the round.
                 visited_slice = dequeued.select(
                     "sitemap_id", "url", "host", "depth",
                     F.lit(round_no).alias("round"),
@@ -1483,35 +1427,23 @@ class CrawlEngine:
                     else visited_slice
                 )
                 visited_thread = _BgAction(
-                    lambda df=visited_slice, rn=round_no: df.write.mode(
-                        "overwrite"
-                    ).parquet(self._ckpt(f"round={rn:05d}", "visited")),
+                    self._write, visited_slice, round_no, "visited",
                     sc=spark.sparkContext,
                 )
                 self._visited_write_threads.append(visited_thread)
                 live_threads.append(visited_thread)
-                npart_round = npart
-                if cfg.adaptive_partitions:
-                    # size the round's exchanges (candidate shuffle, final
-                    # frontier repartition → parquet file count and the
-                    # next round's scan/stage task counts) by data volume;
-                    # n_dequeued × adaptive_fanout approximates the
-                    # candidate volume (the round's biggest exchange) —
-                    # see the CrawlConfig.adaptive_fanout note for the
-                    # high-fanout failure shape this corrects
-                    est_rows = max(n_dequeued, 1) * max(cfg.adaptive_fanout, 1.0)
-                    npart_round = max(
-                        min(npart, 8),
-                        min(
-                            npart,
-                            int(-(-est_rows // cfg.rows_per_partition)),
-                        ),
+                # size the round's exchanges (candidate shuffle, final
+                # frontier repartition → parquet file count and the next
+                # round's scan/stage task counts) by data volume
+                npart_round = max(
+                    min(npart, 8),
+                    min(npart, -(-max(n_dequeued, 1) // self.ROWS_PER_PARTITION)),
+                )
+                if npart_round != cur_sp:
+                    spark.conf.set(
+                        "spark.sql.shuffle.partitions", str(npart_round)
                     )
-                    if npart_round != cur_sp:
-                        spark.conf.set(
-                            "spark.sql.shuffle.partitions", str(npart_round)
-                        )
-                        cur_sp = npart_round
+                    cur_sp = npart_round
                 self._visited_total += n_dequeued
                 bcast_fetch = (
                     cfg.broadcast_fetch_max is not None
@@ -1657,17 +1589,10 @@ class CrawlEngine:
                 #    provably row-local work. Measured as part of the
                 #    round-4 scaling fix (BENCH.md).
                 #
-                #    Write strategy is round-size-adaptive, like the fetch
-                #    and absorb paths: SMALL rounds (≤ DIRECT_ABSORB_MAX,
-                #    the fixpoint-floor regime) cache the dedup output and
-                #    run the parquet write as a CONCURRENT action so the
-                #    candidate chain reads the cache instead of waiting for
-                #    write-then-reread — two fewer serial driver actions
-                #    per round. FAT rounds write-then-reread as before:
-                #    caching multi-GB edge sets alongside `cleaned` adds
-                #    executor-memory pressure for a write whose cost is
-                #    data-proportional anyway (BENCH.md §2.3/§3).
-                overlap_writes = n_dequeued <= self.DIRECT_ABSORB_MAX
+                #    Small rounds (≤ DIRECT_ABSORB_MAX, the fixpoint-floor
+                #    regime) defer their whole write tail to the next
+                #    round end; fat rounds settle it inline (below).
+                small_round = n_dequeued <= self.DIRECT_ABSORB_MAX
                 edges_plan = cleaned.select(
                     "sitemap_id",
                     F.col("url").alias("src"),
@@ -1702,74 +1627,37 @@ class CrawlEngine:
                         F.lit("COMPLETE").alias("status"),
                     )
                 )
-                edges_thread = lineage_thread = None
-                if overlap_writes or cfg.overlap_fat_writes:
-                    # Overlapped rounds (small AND fat are now one
-                    # path): both writes become concurrent actions over
-                    # the cached `cleaned` slice; the candidate chain
-                    # below derives from the SAME cache by the same
-                    # row-local explode, so nothing waits on parquet.
-                    # No extra persist: edges_plan is select/
-                    # array_distinct/explode over `cleaned` —
-                    # recomputing it in the write job costs one cheap
-                    # row-local pass, not a re-run of the fetch/extract
-                    # UDFs (those are upstream of the cache). (The old
-                    # small-round path additionally persisted the
-                    # exploded edges as the candidate source; the
-                    # round-6 driver profile showed each persist() call
-                    # costs ~0.4 s of CacheManager plan compilation —
-                    # more than the row-local explode it saved.)
-                    # Exchange widths can't race the adaptive conf
-                    # retune: edges_plan has no exchange, and
-                    # lineage_plan pins npart_round into its lambda
-                    # (round-4 ADVICE). rn pinned as a default arg: the
-                    # lambdas run on the background thread, and
-                    # round_no is a loop variable the main thread
-                    # increments — a by-reference capture could resolve
-                    # to the NEXT round's number if the thread is slow
-                    # to start (latent, never observed).
-                    edges_new = None
-                    edges_thread = _BgAction(
-                        lambda df=edges_plan, rn=round_no: df.write.mode(
-                            "overwrite"
-                        ).parquet(self._ckpt(f"round={rn:05d}", "edges")),
-                        sc=spark.sparkContext,
-                    )
-                    lineage_thread = _BgAction(
-                        lambda df=lineage_plan, np=npart_round, rn=round_no: (
-                            df.coalesce(np)
-                            .write.mode("overwrite")
-                            .parquet(self._ckpt(f"round={rn:05d}", "lineage"))
-                        ),
-                        sc=spark.sparkContext,
-                    )
-                    live_threads += [edges_thread, lineage_thread]
-                else:
-                    _t = time.perf_counter()
-                    edges_new = self._write(edges_plan, round_no, "edges")
-                    lineage_new = self._write(lineage_plan, round_no, "lineage")
-                    _t = _mark("edges_lineage_write")
+                # Both writes are concurrent actions over the cached
+                # `cleaned` slice, and the candidate chain below derives
+                # from the SAME cache by the same row-local explode, so
+                # nothing waits on parquet. The r5 verbose decomposition
+                # measured a foreground edges+lineage write at ~28 s of a
+                # ~41 s warm mega round at local[32] (+7.7% certified
+                # throughput once overlapped, BENCH.md §1.7). No extra
+                # persist: recomputing the explode in the write job is
+                # one row-local pass, while each persist() costs ~0.4 s
+                # of CacheManager plan compilation (round-6 driver
+                # profile). lineage pins npart_round as its file count,
+                # so a later round's conf retune cannot change it.
+                edges_thread = _BgAction(
+                    self._write, edges_plan, round_no, "edges",
+                    sc=spark.sparkContext,
+                )
+                lineage_thread = _BgAction(
+                    self._write, lineage_plan.coalesce(npart_round),
+                    round_no, "lineage", sc=spark.sparkContext,
+                )
+                live_threads += [edges_thread, lineage_thread]
 
                 # 7) candidates at depth+1, gated by per-sitemap max_depth
-                #    (F2) and robots rules. Source: the written-and-reread
-                #    edges when a foreground write produced them, else the
-                #    cached `cleaned` slice via the identical row-local
-                #    explode (same rows by construction — edges_plan IS
-                #    that explode).
-                if edges_new is not None:
-                    cand_base = edges_new.select(
-                        "sitemap_id",
-                        F.col("dst").alias("url"),
-                        (F.col("depth") + 1).alias("depth"),
-                        F.col("src").alias("parent"),
-                    )
-                else:
-                    cand_base = cleaned.select(
-                        "sitemap_id",
-                        F.explode(F.array_distinct("_links")).alias("url"),
-                        (F.col("depth") + 1).alias("depth"),
-                        F.col("url").alias("parent"),
-                    )
+                #    (F2) and robots rules, from the cached `cleaned`
+                #    slice via the explode that edges_plan writes.
+                cand_base = cleaned.select(
+                    "sitemap_id",
+                    F.explode(F.array_distinct("_links")).alias("url"),
+                    (F.col("depth") + 1).alias("depth"),
+                    F.col("url").alias("parent"),
+                )
                 candidates = (
                     attach_max_depth(cand_base)
                     .filter(F.col("depth") < F.col("max_depth"))
@@ -1878,18 +1766,8 @@ class CrawlEngine:
                 salt = F.lit(0)
                 if cfg.hot_host_threshold is not None:
                     heat_df = (
-                        (
-                            cleaned.groupBy("host").agg(
-                                F.sum(F.size("_links")).alias("_lf")
-                            )
-                            if (overlap_writes or cfg.overlap_fat_writes)
-                            # legacy fat path: the (tiny, already-written)
-                            # lineage parquet is cheaper to re-aggregate
-                            # than the multi-GB cached slice
-                            else lineage_new.groupBy("host").agg(
-                                F.sum("links_found").alias("_lf")
-                            )
-                        )
+                        cleaned.groupBy("host")
+                        .agg(F.sum(F.size("_links")).alias("_lf"))
                         .filter(F.col("_lf") > cfg.hot_host_threshold)
                         .select("host", F.lit(1).alias("_hot"))
                     )
@@ -1946,27 +1824,20 @@ class CrawlEngine:
                 # lineage per round. Block durability is the parquet write;
                 # a lost localCheckpoint block fails the round and resume
                 # re-runs it from the manifest, same as any crash.
-                frontier_thread = None
-                fr_cached = None
+                # lazy localCheckpoint + count: ONE job both materializes
+                # the checkpoint blocks and returns the next round's
+                # frontier size — replacing the eager materialization job
+                # PLUS the next loop-top isEmpty() probe job (round-5
+                # verdict #2).
                 _t = time.perf_counter()
-                if cfg.frontier_handoff:
-                    # lazy localCheckpoint + count: ONE job both
-                    # materializes the checkpoint blocks and returns the
-                    # next round's frontier size — replacing the eager
-                    # materialization job PLUS the next loop-top
-                    # isEmpty() probe job (round-5 verdict #2).
-                    fr_cached = fr_plan.localCheckpoint(eager=False)
-                    live_caches.append(fr_cached)
-                    n_frontier = fr_cached.count()
-                    frontier_thread = _BgAction(
-                        self._write, fr_cached, round_no, "frontier_next",
-                        sc=spark.sparkContext,
-                    )
-                    live_threads.append(frontier_thread)
-                    frontier = fr_cached
-                else:
-                    frontier = self._write(fr_plan, round_no, "frontier_next")
-                    n_frontier = frontier.count()  # parquet metadata count
+                fr_cached = fr_plan.localCheckpoint(eager=False)
+                live_caches.append(fr_cached)
+                n_frontier = fr_cached.count()
+                frontier_thread = _BgAction(
+                    self._write, fr_cached, round_no, "frontier_next",
+                    sc=spark.sparkContext,
+                )
+                live_threads.append(frontier_thread)
                 _t = _mark("frontier_materialize")
                 heavy_tail = {
                     "threads": [
@@ -1990,9 +1861,9 @@ class CrawlEngine:
                     "manifest": None,  # manifest travels with the light tail
                 }
                 seed_write_thread = None  # consumed by round 0's tail
-                frontier_ckpt = fr_cached
+                frontier = frontier_ckpt = fr_cached
                 light_tail = {
-                    "threads": [frontier_thread] if frontier_thread else [],
+                    "threads": [frontier_thread],
                     "unpersist": [],
                     "bcs": [],
                     "round_no": round_no,
@@ -2009,7 +1880,7 @@ class CrawlEngine:
                     settle_tail(pending_tail)
                     pending_tail = None
                 _t = _mark("settle_prev_tail")
-                if overlap_writes and cfg.pipeline_rounds:
+                if small_round:
                     # small rounds: defer everything to the next round end
                     pending_tail = {
                         "threads": heavy_tail["threads"] + light_tail["threads"],
@@ -2081,7 +1952,7 @@ class CrawlEngine:
                     pass
             raise
         finally:
-            # undo adaptive retuning on EVERY exit, including
+            # undo the per-round retuning on EVERY exit, including
             # exceptional ones (a mid-run RuntimeError — e.g. the
             # image_keys_broadcast_max bound — or a failed Spark job
             # must not leave a shared/external session clamped as

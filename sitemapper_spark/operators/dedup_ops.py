@@ -132,14 +132,16 @@ def _sig_from_hashes_col(hashes: Column, k: int, seed: int) -> Column:
 def minhash_signature_col(shingles: Column, k: int = 64, seed: int = 42) -> Column:
     """MinHash signature: k universal-hash permutations over the
     xxhash64'd shingle set, each reduced with array_min — all JVM-side.
+    The pipeline uses :func:`minhash_signature_np_col`; this k-pass
+    Catalyst form is kept as its bit-identity oracle in the tests.
     """
     hashes = F.transform(shingles, lambda s: F.pmod(F.xxhash64(s), F.lit(_PRIME)))
     return _sig_from_hashes_col(hashes, k, seed)
 
 
 def minhash_signature_np_col(shingles: Column, k: int = 64, seed: int = 42) -> Column:
-    """Numpy alternative to :func:`minhash_signature_col` (round-4
-    verdict #6 A/B): the Catalyst signature is k separate
+    """The pipeline's MinHash signature (round-4 verdict #6 A/B): the
+    Catalyst signature (:func:`minhash_signature_col`) is k separate
     transform+array_min passes over every shingle array — at k=128 that
     was the bench suite's #2 cost. Here ONE Arrow-batched pandas UDF
     computes the whole batch's signatures as a
@@ -272,15 +274,6 @@ def minhash_near_dup_pairs(
     threshold: float = 0.7,
     seed: int = 42,
     collapse_exact: bool = True,
-    sig_impl: str = "numpy",  # "catalyst" | "numpy" — bit-identical
-    # signatures (see minhash_signature_np_col); numpy is the measured
-    # default: 4.63 s vs 15.55 s best-warm for the full pipeline at
-    # sf0.1/k=128 with identical pair sets (bench_minhash_ab.json).
-    # Measured regime (round-5 ADVICE #4): the win comes from replacing
-    # k Catalyst transform+array_min passes with one Arrow matmul, so it
-    # grows with k and with corpus size; at very small inputs (hundreds
-    # of docs) the pandas/Arrow batch overhead can make the two paths a
-    # wash — both stay available and bit-identical.
     broadcast_attach: bool = True,  # broadcast-hash the per-doc shingle
     # hash sets into the verify attach joins (guide §3.1): the build
     # side is O(docs) int64 arrays (~0.5 KB/doc), fine up to ~10^6-10^7
@@ -343,16 +336,16 @@ def minhash_near_dup_pairs(
             shingles_col(tokens_col(F.col(text_col)), shingle_n)
         ).alias("shh"),
     ).persist()
-    sig_fn = (
-        _sig_from_hashes_np_col if sig_impl == "numpy"
-        else _sig_from_hashes_col
-    )
     modp = F.transform("shh", lambda h: F.pmod(h, F.lit(_PRIME)))
     # sigs persisted too: banding consumes them twice (self-join sides)
     # and best-of-N warm passes re-enter here — one 8·k-bytes/doc cache
-    # removes the whole hash+matmul recompute from the warm path.
+    # removes the whole hash+matmul recompute from the warm path. The
+    # signature is one Arrow matrix UDF: 4.63 s vs 15.55 s best-warm for
+    # this pipeline against the k-pass Catalyst form at sf0.1/k=128,
+    # identical pair sets (bench_minhash_ab.json); the win grows with k
+    # and corpus size, and at hundreds of docs the two are a wash.
     sigs = sh.select(
-        id_col, sig_fn(modp, k, seed).alias("sig")
+        id_col, _sig_from_hashes_np_col(modp, k, seed).alias("sig")
     ).persist()
     cand = lsh_candidate_pairs(sigs, id_col, "sig", bands, rows_per_band)
     a = sh.select(F.col(id_col).alias("id_a"), F.col("shh").alias("sh_a"))

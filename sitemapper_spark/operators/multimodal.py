@@ -1,17 +1,11 @@
-"""Multimodal (image/audio/video) column operators.
+"""Multimodal column operators: image decode-verify.
 
 Media ride as opaque ``binary`` columns with typed metadata
-(BASELINE.json.input_hint: ``bytes, w, h, fmt, caption, phash``); all
+(BASELINE.json.input_hint: ``bytes, w, h, fmt, caption, phash``); the
 compute is Arrow-batched ``mapInPandas`` so each Python worker sees
-whole record batches. The Spark-side plumbing (schemas, batch shapes,
-partitioning) is real and tested; codecs this container lacks are
-stubbed behind ``NotImplementedError`` as mandated:
-
-* image decode: REAL for the corpus formats (pure-numpy PNG + the
-  deterministic lossy stand-in, :mod:`sitemapper_spark.functions.images`);
-* image resize / grayscale / phash: REAL (numpy block-mean);
-* audio decode / video frame-sample: STUBS — deterministic fakes for
-  plumbing tests, ``NotImplementedError`` for real codecs.
+whole record batches. Image decode is real for the corpus formats
+(pure-numpy PNG + the deterministic lossy stand-in,
+:mod:`sitemapper_spark.functions.images`).
 """
 
 from __future__ import annotations
@@ -21,17 +15,10 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.images import decode_image, dhash64, psnr, synth_pixels
+from ..functions.images import decode_image, psnr, synth_pixels
 
-__all__ = [
-    "decode_verify",
-    "image_features",
-    "resize_images",
-    "audio_decode_stub",
-    "video_frame_sample_stub",
-]
+__all__ = ["decode_verify"]
 
 _VERIFY_SCHEMA = (
     "url string, image_id string, fmt string, phash bigint, ok boolean, "
@@ -133,137 +120,3 @@ def decode_verify(pages: DataFrame, min_psnr_db: float = 40.0) -> DataFrame:
         lambda it: _verify_batches(it, min_psnr_db), schema=_VERIFY_SCHEMA
     )
 
-
-_FEAT_SCHEMA = (
-    "image_id string, mean_lum double, std_lum double, phash bigint, "
-    "phash_recomputed bigint"
-)
-
-
-def image_features(pages: DataFrame) -> DataFrame:
-    """Per-image features: luminance stats + recomputed perceptual hash
-    (compared against the stored ``phash`` column downstream)."""
-
-    def feats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for image_id, data, fmt, phash in zip(
-                pdf["image_id"], pdf["bytes"], pdf["fmt"], pdf["phash"]
-            ):
-                try:
-                    px = decode_image(bytes(data), fmt)
-                    lum = px.astype(np.float64).mean(axis=2)
-                    out.append(
-                        (image_id, round(float(lum.mean()), 4),
-                         round(float(lum.std()), 4), int(phash),
-                         dhash64(px))
-                    )
-                except Exception:
-                    out.append((image_id, None, None, int(phash), None))
-            yield pd.DataFrame(
-                out,
-                columns=["image_id", "mean_lum", "std_lum", "phash",
-                         "phash_recomputed"],
-            )
-
-    return pages.select("image_id", "bytes", "fmt", "phash").mapInPandas(
-        feats, schema=_FEAT_SCHEMA
-    )
-
-
-def _block_mean_resize(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
-    """Real numpy block-mean resize (area-average downsample)."""
-    h, w, c = px.shape
-    ys = np.linspace(0, h, out_h + 1, dtype=np.int64)
-    xs = np.linspace(0, w, out_w + 1, dtype=np.int64)
-    out = np.empty((out_h, out_w, c), dtype=np.float64)
-    for i in range(out_h):
-        for j in range(out_w):
-            out[i, j] = px[
-                ys[i] : max(ys[i + 1], ys[i] + 1),
-                xs[j] : max(xs[j + 1], xs[j] + 1),
-            ].mean(axis=(0, 1))
-    return out.round().clip(0, 255).astype(np.uint8)
-
-
-def resize_images(pages: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Decode → block-mean resize → re-encode (PNG). Returns
-    (image_id, bytes, w, h, fmt) with the resized payload."""
-    from ..functions.images import png_encode
-
-    def rz(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for image_id, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf["fmt"]):
-                try:
-                    px = decode_image(bytes(data), fmt)
-                    small = _block_mean_resize(px, out_w, out_h)
-                    out.append((image_id, png_encode(small), out_w, out_h, "png"))
-                except Exception:
-                    out.append((image_id, None, out_w, out_h, "png"))
-            yield pd.DataFrame(
-                out, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    return pages.select("image_id", "bytes", "fmt").mapInPandas(
-        rz, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-
-
-def audio_decode_stub(media: DataFrame, fmt_col: str = "fmt") -> DataFrame:
-    """STUB: audio decode. No audio codec libraries exist in this
-    container; the Spark plumbing (binary column in, float frame stats
-    out, Arrow batching) is real — a deterministic fake 'decoder'
-    (bytes → int16 PCM view) stands in so batch shape and schema are
-    testable. Raises ``NotImplementedError`` for real formats."""
-
-    def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data, fmt in zip(pdf["image_id"], pdf["bytes"], pdf[fmt_col]):
-                if fmt in ("pcm16", "fake"):
-                    a = np.frombuffer(bytes(data), dtype="<i2").astype(np.float64)
-                    out.append((mid, len(a), round(float(np.abs(a).mean()), 3)))
-                else:
-                    raise NotImplementedError(
-                        f"audio codec {fmt!r}: no audio libraries in container"
-                    )
-            yield pd.DataFrame(out, columns=["image_id", "n_samples", "mean_abs"])
-
-    return media.select("image_id", "bytes", fmt_col).mapInPandas(
-        dec, schema="image_id string, n_samples bigint, mean_abs double"
-    )
-
-
-def video_frame_sample_stub(
-    media: DataFrame, every_n: int = 10, fmt_col: str = "fmt"
-) -> DataFrame:
-    """STUB: video frame sampling. A 'fakevid' payload is a
-    concatenation of fixed-size raw RGB frames — the sampler slices
-    every ``every_n``-th frame (real plumbing: one row in, many rows
-    out via mapInPandas). Real containers (mp4 etc.) raise
-    ``NotImplementedError``."""
-
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for mid, data, fmt, w, h in zip(
-                pdf["image_id"], pdf["bytes"], pdf[fmt_col], pdf["w"], pdf["h"]
-            ):
-                if fmt != "fakevid":
-                    raise NotImplementedError(
-                        f"video container {fmt!r}: no video libraries in container"
-                    )
-                frame_sz = int(w) * int(h) * 3
-                buf = bytes(data)
-                n_frames = len(buf) // frame_sz
-                for fi in range(0, n_frames, every_n):
-                    frame = np.frombuffer(
-                        buf[fi * frame_sz : (fi + 1) * frame_sz], dtype=np.uint8
-                    )
-                    out.append((mid, fi, round(float(frame.mean()), 3)))
-            yield pd.DataFrame(out, columns=["image_id", "frame_idx", "mean_val"])
-
-    return media.select("image_id", "bytes", fmt_col, "w", "h").mapInPandas(
-        sample, schema="image_id string, frame_idx int, mean_val double"
-    )

@@ -81,7 +81,7 @@ def test_run_level_passes_extra_conf_as_json(bs, monkeypatch):
     monkeypatch.setattr(bs.subprocess, "run", fake_run)
     monkeypatch.setattr(bs, "prewarm_page_cache", lambda p: None)
     conf = {"spark.sql.execution.arrow.maxRecordsPerBatch": "8192"}
-    opts = {"overlap_fat_writes": False}
+    opts = {"salt_buckets": 16}
     bs.run_level(8, "/tmp/x_p1000_h2_i1x1_r2", "mega", 1, "shuffle",
                  extra_conf=conf, engine_opts=opts)
     import json as _json

@@ -42,17 +42,27 @@ def run_crawl(spark, max_depth, tmp_path, use_html, budget=None):
     return engine.run([(ROOT, "run1", max_depth, 0.0)])
 
 
+@pytest.fixture(scope="module")
+def golden_crawl(spark, tmp_path_factory):
+    """The maxDepth-5 ``use_html=False`` crawl, shared by the tests that
+    assert different things about it."""
+    return run_crawl(spark, 5, tmp_path_factory.mktemp("golden"), False)
+
+
 @pytest.mark.parametrize("use_html", [False, True])
-def test_golden_maxdepth5(spark, tmp_path, use_html):
+def test_golden_maxdepth5(spark, tmp_path, request, use_html):
     golden = json.load(open(GOLDEN))
-    result = run_crawl(spark, 5, tmp_path, use_html)
+    result = (
+        run_crawl(spark, 5, tmp_path, use_html)
+        if use_html
+        else request.getfixturevalue("golden_crawl")
+    )
     assert result.adjacency_dict("run1") == golden
 
 
-def test_golden_json_output_shape(spark, tmp_path):
+def test_golden_json_output_shape(golden_crawl):
     golden = json.load(open(GOLDEN))
-    result = run_crawl(spark, 5, tmp_path, use_html=False)
-    obj = result.to_json_obj("run1")
+    obj = golden_crawl.to_json_obj("run1")
     assert obj["Count"] == len(golden)
     assert {r["URL"]: r["Links"] for r in obj["Results"]} == golden
 
@@ -98,10 +108,9 @@ def test_depth0_crawls_nothing(spark, tmp_path):
     assert result.adjacency_dict("run1") == {}
 
 
-def test_visited_depths_are_minimal(spark, tmp_path):
-    result = run_crawl(spark, 5, tmp_path, use_html=False)
+def test_visited_depths_are_minimal(golden_crawl):
     depths = {
-        r["url"]: r["depth"] for r in result.visited.collect()
+        r["url"]: r["depth"] for r in golden_crawl.visited.collect()
     }
     assert depths[ROOT] == 0
     assert depths[f"{ROOT}/aubergine"] == 1

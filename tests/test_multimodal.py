@@ -1,20 +1,12 @@
 """Multimodal plumbing: decode-verify over the corpus (the input_hint
-per-row invariant), features, resize, and the documented codec stubs."""
-
-import numpy as np
-import pytest
-from pyspark.sql import functions as F
+per-row invariant)."""
 
 from sitemapper_spark import corpus as cm
 from sitemapper_spark.operators import multimodal as M
 
 
-@pytest.fixture(scope="module")
-def pages(spark):
-    return cm.testsite_corpus(spark, w=24, h=16).persist()
-
-
-def test_decode_verify_all_rows_pass(pages):
+def test_decode_verify_all_rows_pass(spark):
+    pages = cm.testsite_corpus(spark, w=24, h=16)
     rows = M.decode_verify(pages).collect()
     assert len(rows) == 7
     assert all(r["ok"] for r in rows), [r.asDict() for r in rows if not r["ok"]]
@@ -25,47 +17,3 @@ def test_decode_verify_all_rows_pass(pages):
         else:
             assert r["psnr_db"] >= 40.0
 
-
-def test_image_features_phash_matches_stored(pages):
-    rows = M.image_features(pages).collect()
-    assert all(r["phash_recomputed"] == r["phash"] for r in rows)
-    assert all(0 <= r["mean_lum"] <= 255 for r in rows)
-
-
-def test_resize_roundtrip(spark, pages):
-    small = M.resize_images(pages, 8, 6).collect()
-    from sitemapper_spark.functions.images import png_decode
-
-    for r in small:
-        px = png_decode(bytes(r["bytes"]))
-        assert px.shape == (6, 8, 3)
-
-
-def test_audio_stub_fake_pcm(spark):
-    pcm = np.arange(-500, 500, dtype="<i2").tobytes()
-    df = spark.createDataFrame(
-        [("a1", bytearray(pcm), "pcm16")], "image_id string, bytes binary, fmt string"
-    )
-    row = M.audio_decode_stub(df).collect()[0]
-    assert row["n_samples"] == 1000
-    assert row["mean_abs"] == 250.0
-
-
-def test_audio_stub_real_format_raises(spark):
-    df = spark.createDataFrame(
-        [("a2", bytearray(b"ID3realmp3"), "mp3")],
-        "image_id string, bytes binary, fmt string",
-    )
-    with pytest.raises(Exception, match="NotImplementedError|no audio"):
-        M.audio_decode_stub(df).collect()
-
-
-def test_video_stub_frame_sampling(spark):
-    w, h, n_frames = 4, 3, 25
-    frames = np.arange(n_frames * w * h * 3, dtype=np.uint8).tobytes()
-    df = spark.createDataFrame(
-        [("v1", bytearray(frames), "fakevid", w, h)],
-        "image_id string, bytes binary, fmt string, w int, h int",
-    )
-    rows = M.video_frame_sample_stub(df, every_n=10).collect()
-    assert [r["frame_idx"] for r in rows] == [0, 10, 20]

@@ -190,6 +190,57 @@ class TestCrashSafeSwaps:
         res2 = CrawlEngine(spark, corpus, cfg).run(SEEDS, resume=True)
         assert res2.adjacency_dict("s0") == adj1
 
+    @pytest.mark.xfail(
+        strict=True,
+        raises=AssertionError,
+        reason="known data loss: expire's per-round rewrites and its "
+        "frontier swap are not one commit, and _recover_swaps drops the "
+        "staged frontier, so a crash after round 1's visited rewrite "
+        "loses the expired URL for good (ROADMAP direction 6: expire as "
+        "tombstones under one atomic commit)",
+    )
+    def test_expire_crash_mid_rewrite_loses_no_url(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A crash inside expire, retried on a fresh engine and resumed,
+        must end with the same visited set as the uninterrupted expire →
+        resume path."""
+        expired = [("s0", f"{ROOT}/tomato.html"),  # visited in round 1
+                   ("s0", f"{ROOT}/aubergine/lemon.html")]  # round 2
+
+        def visited_keys(res):
+            return {(r["sitemap_id"], r["url"]) for r in res.visited.collect()}
+
+        ref_engine, _ = self._crawl(spark, str(tmp_path / "ck_ref"))
+        assert ref_engine.expire(expired) == 2
+        ref = visited_keys(ref_engine.run(SEEDS, resume=True))
+
+        ckpt = str(tmp_path / "ck_crash")
+        engine, _ = self._crawl(spark, ckpt)
+        rewrite = CrawlEngine._rewrite_minus
+
+        def crash_after_round1_visited(self, round_no, name, *args):
+            rewrite(self, round_no, name, *args)
+            if (round_no, name) == (1, "visited"):
+                raise RuntimeError("simulated crash inside expire")
+
+        monkeypatch.setattr(
+            CrawlEngine, "_rewrite_minus", crash_after_round1_visited
+        )
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            engine.expire(expired)
+        monkeypatch.undo()
+
+        cfg = CrawlConfig(
+            max_depth=3, use_bloom=False, num_partitions=4,
+            checkpoint_dir=ckpt,
+        )
+        retry = CrawlEngine(spark, cm.testsite_corpus(spark), cfg)
+        n_retry = retry.expire(expired)
+        got = visited_keys(retry.run(SEEDS, resume=True))
+        assert n_retry == 2
+        assert got == ref
+
 
 class TestRecrawlPolicy:
     def test_age_policy_recrawls_cohort_only(self, spark, tmp_path):
@@ -345,18 +396,17 @@ class TestImageBroadcastBound:
 
 
 class TestRoundTailPipelining:
-    """pipeline_rounds (round-4 scaling work): a small round's
-    background writes settle — and its manifest is written — at the end
-    of the NEXT round, overlapping the write tail with compute. The
-    invariant under test: "manifest present = round complete" survives
-    the deferral, so a crash that loses the last manifest (and even one
-    of that round's deferred artifacts) resumes to the identical final
-    state."""
+    """Round-tail pipelining: a small round's background writes settle
+    — and its manifest is written — at the end of the NEXT round,
+    overlapping the write tail with compute. The invariant under test:
+    "manifest present = round complete" survives the deferral, so a
+    crash that loses the last manifest (and even one of that round's
+    deferred artifacts) resumes to the identical final state."""
 
-    def _run(self, spark, corpus, ckpt, **over):
+    def _run(self, spark, corpus, ckpt):
         cfg = CrawlConfig(
             max_depth=5, use_bloom=False, num_partitions=4,
-            checkpoint_dir=ckpt, **over,
+            checkpoint_dir=ckpt,
         )
         return CrawlEngine(spark, corpus, cfg).run(SEEDS)
 
@@ -366,15 +416,6 @@ class TestRoundTailPipelining:
                for r in res.visited.collect()}
         edg = {(r["src"], r["dst"]) for r in res.edges.collect()}
         return vis, edg, res.adjacency_dict("s0")
-
-    def test_pipelined_equals_unpipelined(self, spark, tmp_path):
-        """Pipelining is pure scheduling: output must be byte-identical
-        with it off."""
-        corpus = cm.testsite_corpus(spark)
-        on = self._run(spark, corpus, str(tmp_path / "ck_on"))
-        off = self._run(spark, corpus, str(tmp_path / "ck_off"),
-                        pipeline_rounds=False)
-        assert self._state(on) == self._state(off)
 
     def test_crash_losing_deferred_tail_resumes_identical(
         self, spark, tmp_path
@@ -396,7 +437,7 @@ class TestRoundTailPipelining:
         )
         last = rounds[-1]
         assert res.rounds == last + 1
-        # simulate the crash window pipeline_rounds opens: manifest of
+        # simulate the crash window pipelining opens: manifest of
         # the last round missing, one of its deferred artifacts gone
         os.remove(os.path.join(ckpt, f"round={last:05d}", "MANIFEST.json"))
         shutil.rmtree(os.path.join(ckpt, f"round={last:05d}", "edges"),
@@ -416,34 +457,20 @@ class TestRoundTailPipelining:
 class TestAdaptivePartitions:
     """Per-round data-volume exchange sizing (BENCH.md §3.3): tiny
     fixpoint rounds must not scatter into cores-many ~1k-row tasks.
-    Contract: (1) output is identical with the knob on or off — the
-    parallelism-invariance the scaling protocol asserts across
-    local[8]/local[32] also holds across per-round partition counts;
-    (2) the engine restores the session's shuffle-partition conf on
-    normal exit; (3) small rounds actually produce the clamped file
-    count (the mechanism is live, not silently bypassed)."""
-
-    def _run(self, spark, corpus, ckpt, adaptive):
-        cfg = CrawlConfig(
-            max_depth=4, use_bloom=True, bloom_min_visited=500,
-            checkpoint_dir=ckpt, adaptive_partitions=adaptive,
-        )
-        return CrawlEngine(spark, corpus, cfg).run(
-            [(ROOT, "s0", 4, 0.0)]
-        )
+    Contract: (1) the engine restores the session's shuffle-partition
+    conf on exit; (2) small rounds actually produce the clamped file
+    count (the mechanism is live, not silently bypassed). Output
+    invariance across partition counts is
+    test_determinism.py::test_partitioning_invariance."""
 
     def test_identical_output_and_conf_restored(self, spark, tmp_path):
         corpus = cm.testsite_corpus(spark)
         before = spark.conf.get("spark.sql.shuffle.partitions")
-        on = self._run(spark, corpus, str(tmp_path / "ck_on"), True)
-        off = self._run(spark, corpus, str(tmp_path / "ck_off"), False)
-        key = lambda res: (  # noqa: E731
-            sorted((r["sitemap_id"], r["url"], r["depth"])
-                   for r in res.visited.collect()),
-            sorted((r["sitemap_id"], r["src"], r["dst"])
-                   for r in res.edges.collect()),
+        cfg = CrawlConfig(
+            max_depth=4, use_bloom=True, bloom_min_visited=500,
+            checkpoint_dir=str(tmp_path / "ck_on"),
         )
-        assert key(on) == key(off)
+        CrawlEngine(spark, corpus, cfg).run([(ROOT, "s0", 4, 0.0)])
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
     def test_small_round_file_count_clamped(self, spark, tmp_path):

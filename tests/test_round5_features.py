@@ -1,5 +1,5 @@
 """Round-5 features: constructive hamming>0 image-dedup contract and
-the numpy MinHash signature A/B implementation."""
+the numpy MinHash signature implementation."""
 
 from __future__ import annotations
 
@@ -141,37 +141,29 @@ class TestMinhashNumpySignature:
                 texts.append((i + 1000, base + " tiny suffix change"))
         docs = spark.createDataFrame(texts, "doc_id long, text string")
         kw = dict(threshold=0.5, k=32, bands=16, rows_per_band=2, seed=7)
-        cat = {
+        pairs = {
             (r["id_a"], r["id_b"], r["jaccard"])
-            for r in minhash_near_dup_pairs(docs, sig_impl="catalyst", **kw).collect()
+            for r in minhash_near_dup_pairs(docs, **kw).collect()
         }
-        npy = {
-            (r["id_a"], r["id_b"], r["jaccard"])
-            for r in minhash_near_dup_pairs(docs, sig_impl="numpy", **kw).collect()
-        }
-        assert cat == npy
-        assert len(cat) >= 10  # the planted near-dups were found
+        assert len(pairs) >= 10  # the planted near-dups were found
 
 
 class TestOverlapFatWrites:
-    """overlap_fat_writes (round-5 scaling work): on fat rounds the
-    edges+lineage writes become concurrent actions and the candidate
-    chain derives from the cached `cleaned` slice via the identical
-    row-local explode. Contract: (1) pure scheduling — output identical
-    with the knob off (the pre-r5 foreground barrier); (2) the crash
-    window it opens is the SAME one pipeline_rounds already guarantees
-    against ("manifest present = round complete"): losing the last
-    manifest plus a background-written artifact resumes to the
-    reference state. DIRECT_ABSORB_MAX is pinned tiny so every round
-    takes the fat path."""
+    """On fat rounds the edges+lineage writes are concurrent actions
+    and the candidate chain derives from the cached `cleaned` slice via
+    the identical row-local explode. The crash window this opens is the
+    SAME one round-tail pipelining guards against ("manifest present =
+    round complete"): losing the last manifest plus a background-written
+    artifact resumes to the reference state. DIRECT_ABSORB_MAX is pinned
+    tiny so every round takes the fat path."""
 
-    def _run(self, spark, corpus, ckpt, **over):
+    def _run(self, spark, corpus, ckpt):
         from sitemapper_spark import corpus as cm
         from sitemapper_spark.engine import CrawlConfig, CrawlEngine
 
         cfg = CrawlConfig(
             max_depth=5, use_bloom=False, num_partitions=4,
-            checkpoint_dir=ckpt, **over,
+            checkpoint_dir=ckpt,
         )
         seeds = [(cm.testsite_root(), "s0", 3, 0.0)]
         return CrawlEngine(spark, corpus, cfg).run(seeds)
@@ -182,17 +174,6 @@ class TestOverlapFatWrites:
                for r in res.visited.collect()}
         edg = {(r["src"], r["dst"]) for r in res.edges.collect()}
         return vis, edg, res.adjacency_dict("s0")
-
-    def test_overlapped_equals_barrier(self, spark, tmp_path, monkeypatch):
-        from sitemapper_spark import corpus as cm
-        from sitemapper_spark.engine import CrawlEngine
-
-        monkeypatch.setattr(CrawlEngine, "DIRECT_ABSORB_MAX", 2)
-        corpus = cm.testsite_corpus(spark)
-        on = self._run(spark, corpus, str(tmp_path / "ck_fat_on"))
-        off = self._run(spark, corpus, str(tmp_path / "ck_fat_off"),
-                        overlap_fat_writes=False)
-        assert self._state(on) == self._state(off)
 
     def test_crash_losing_bg_edges_resumes_identical(
         self, spark, tmp_path, monkeypatch

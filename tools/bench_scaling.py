@@ -65,7 +65,7 @@ Usage: python tools/bench_scaling.py [n_pages] [n_hosts] [img_w img_h]
        [--fetch=broadcast|shuffle|bucketed] [--buckets=32]
        [--topology=threads|procs] [--exec-cores=8] [--exec-mem-mb=12288]
        [--shards=1] [--out=FILE.json] [--extra-conf=spark.k1=v1,spark.k2=v2]
-       [--engine-opt=overlap_fat_writes=false,...]  (CrawlConfig kwargs)
+       [--engine-opt=salt_buckets=16,...]  (CrawlConfig kwargs)
 """
 
 from __future__ import annotations
@@ -442,7 +442,7 @@ def main() -> None:
         if "=" in kv)
 
     # --engine-opt=k1=v1,k2=v2 → CrawlConfig kwarg A/Bs (e.g.
-    # overlap_fat_writes=false) without editing the harness; values
+    # salt_buckets=16) without editing the harness; values
     # coerced bool/int/float by shape, else kept as strings
     def _coerce(v: str):
         if v.lower() in ("true", "false"):
